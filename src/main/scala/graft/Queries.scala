@@ -1084,17 +1084,6 @@ object Queries {
     ivfpqRerankServe(s, dir, pqQueries(t(s, dir, "embeddings")))
       .orderBy(col("query_id"), col("rank"))
 
-  /** Recall@5 of the IVFPQ+refine serve vs the exact lattice truth —
-    * with [[q_pq_rerank_recall]] (0.94) and [[q_ivfpq_recall]]
-    * (0.38) this row completes the committed loss decomposition:
-    * refine recovers the codebook half (0.38 → 0.63 at sf0.01), and
-    * the residual gap to 1.0 is pure CELL PRUNING — at 2 probed
-    * cells of 8 over a 500-vector corpus the shortlist (64 of ~125
-    * in-cell candidates) is nearly exhaustive, so 0.63 IS the
-    * nProbe=2 pruning ceiling under the lattice-L2 truth (the 0.77
-    * of [[q_ann_recall]] is the same ceiling under its own
-    * float-cosine truth and probe). More probes, not a wider
-    * shortlist, is the production knob for that half. */
   /** The probed depths of [[q_ivfpq_probe_recall]], shared verbatim
     * with the oracle SQL so the curve's geometry cannot drift. 2 is
     * the catalog serve's depth, 8 == nCells probes every cell (zero
@@ -1119,7 +1108,13 @@ object Queries {
     * PRODUCTION serve cost lives in q_topk_ivfpq_indexed and the
     * committed probe-cost curve, this row prices only the recall
     * measurement. This is the curve a 100 TB deployment reads to
-    * pick its recall/scan-cost operating point. */
+    * pick its recall/scan-cost operating point.
+    *
+    * The truth cut and every rung's rerank read ONE persisted
+    * exact-scored crossjoin: O(corpus × queries) rows
+    * MEMORY_AND_DISK, so the row's memory/disk footprint grows with
+    * corpus size times query count (the truth pass scores every pair
+    * anyway). */
   def q_ivfpq_probe_recall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = t(s, dir, "embeddings")
@@ -1207,6 +1202,22 @@ object Queries {
       .orderBy(col("n_probe"))
   }
 
+  /** Recall@5 of the IVFPQ+refine serve vs the exact lattice truth —
+    * with [[q_pq_rerank_recall]] (0.94) and [[q_ivfpq_recall]]
+    * (0.38) this row completes the committed loss decomposition:
+    * refine recovers the codebook half (0.38 → 0.63 at sf0.01), and
+    * the residual gap to 1.0 is pure CELL PRUNING — at 2 probed
+    * cells of 8 over a 500-vector corpus the shortlist (64 of ~125
+    * in-cell candidates) is nearly exhaustive, so 0.63 IS the
+    * nProbe=2 pruning ceiling under the lattice-L2 truth (the 0.77
+    * of [[q_ann_recall]] is the same ceiling under its own
+    * float-cosine truth and probe). More probes, not a wider
+    * shortlist, is the production knob for that half.
+    *
+    * The truth cut and the rerank read ONE persisted exact-scored
+    * crossjoin: O(corpus × queries) rows MEMORY_AND_DISK, so the
+    * row's memory/disk footprint grows with corpus size times query
+    * count (the truth pass scores every pair anyway). */
   def q_ivfpq_rerank_recall(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     val queries = pqQueries(emb, RecallQueryCount)
@@ -1319,7 +1330,12 @@ object Queries {
     * neighbor only gets lost if ADC ranks it below the shortlist
     * bound, so the rerank recall sits near 1 where pure ADC is
     * partial. Same 20-query composed-oracle shape as the other
-    * recall rows; serve reads the SAVED codes. */
+    * recall rows; serve reads the SAVED codes.
+    *
+    * The truth cut and the rerank read ONE persisted exact-scored
+    * crossjoin: O(corpus × queries) rows MEMORY_AND_DISK, so the
+    * row's memory/disk footprint grows with corpus size times query
+    * count (the truth pass scores every pair anyway). */
   def q_pq_rerank_recall(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     val queries = pqQueries(emb, RecallQueryCount)
@@ -1802,8 +1818,7 @@ object Queries {
     * sequence is emitted alongside, so the training decisions
     * themselves are hash-pinned, like q_bpe_crafted. */
   def q_bpe_tokens(s: SparkSession, dir: String): DataFrame =
-    bpeTokenSignals(t(s, dir, "documents"),
-      mergeKey = Some((s"bpe-$dir", tableEpoch(s, dir, "documents"))))
+    bpeTokenSignals(t(s, dir, "documents"))
 
   /** [[q_bpe_tokens]]'s engine. The ORACLE-checked row trains on the
     * FULL vocabulary (the DuckDB side has no top-N sample) with the
@@ -1822,19 +1837,8 @@ object Queries {
     * (the r12 in-situ attribution: the giant used to encode twice,
     * 26.0 s vs 13.6 s of phases). */
   private[graft] def bpeTokenSignals(docs: DataFrame,
-      splitChars: Long = RepetitionSplitChars,
-      mergeKey: Option[(String, Option[String])] = None): DataFrame = {
-    // r20: with a (cacheKey, epoch) voucher the 8-round distributed
-    // trainer runs once per corpus version (BpeLite.ensureTrainedMerges
-    // — the saved-index discipline applied to the tokenizer artifact);
-    // q_bpe_tokens and q_tokenizer_fertility each re-trained per run.
-    // The learned sequence is the memo'd value itself, so the emitted
-    // `merges` column — and every oracle — is unchanged.
-    val merges = mergeKey match {
-      case Some((k, e)) =>
-        graft.text.BpeLite.ensureTrainedMerges(docs, k, e, numMerges = 8)
-      case None => graft.text.BpeLite.trainDistributed(docs, numMerges = 8)
-    }
+      splitChars: Long = RepetitionSplitChars): DataFrame = {
+    val merges = graft.text.BpeLite.trainDistributed(docs, numMerges = 8)
     bpeEncodeSignals(docs, merges, splitChars, "q_bpe_tokens")
   }
 
@@ -3734,19 +3738,17 @@ object Queries {
       .orderBy(col("cluster_id"), col("doc_id"))
   }
 
-  /** The signature-index component map, resolved ONCE per corpus
-    * epoch ([[graft.dedup.Clusters.ensureComponents]]) and shared by
-    * every consumer of the saved signature index's near-dup clusters
+  /** The component map over the saved signature index's near-dup
+    * candidates, shared by every consumer of those clusters
     * (q_dup_clusters, q_corpus_filter/q_training_mix,
-    * q_split_neardup/q_split_assign_delta — r20: each re-ran the
-    * candidate self-join + union-find per invocation). */
+    * q_split_neardup/q_split_assign_delta). The index is built once
+    * per corpus epoch; the candidate self-join + union-find run per
+    * call. */
   private def sigComponents(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val epoch = tableEpoch(s, dir, "documents")
-    graft.dedup.Clusters.ensureComponents(s, s"sig-cc|$dir", epoch) {
-      Dedup.candidatesFromIndex(s.read.parquet(
-        Dedup.ensureSavedSignatureIndex(docs, dir, epoch = epoch)))
-    }
+    graft.dedup.Clusters.connectedComponents(
+      Dedup.candidatesFromIndex(s.read.parquet(Dedup.ensureSavedSignatureIndex(
+        docs, dir, epoch = tableEpoch(s, dir, "documents")))))
   }
 
   /** Embedding-side near-dup RESOLUTION — the vector twin of
@@ -3885,8 +3887,7 @@ object Queries {
     * two truncating divisions into microunits. */
   def q_tokenizer_fertility(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val sig = bpeTokenSignals(docs,
-      mergeKey = Some((s"bpe-$dir", tableEpoch(s, dir, "documents"))))
+    val sig = bpeTokenSignals(docs)
       .select(col("doc_id"), col("n_bpe_tokens"), col("n_regex_tokens"))
     docs.select(col("doc_id"), col("lang"), col("n_chars"))
       .join(sig, "doc_id")
@@ -4199,9 +4200,7 @@ object Queries {
       rounds = 2, cacheKey = s"semdedup-$dir",
       epoch = tableEpoch(s, dir, "embeddings"))
     val (assigned, _) = vector.Ivf.loadIndex(s, path)
-    graft.dedup.SemDedup.semanticDedupAssigned(assigned,
-        compKey = Some((s"semdedup-cc-$dir",
-          tableEpoch(s, dir, "embeddings"))))
+    graft.dedup.SemDedup.semanticDedupAssigned(assigned)
       .orderBy(col("vec_id"))
   }
 
@@ -4228,9 +4227,7 @@ object Queries {
       rounds = 2, cacheKey = s"semdedup-scaled-$dir",
       epoch = tableEpoch(s, dir, "embeddings"))
     val (assigned, _) = vector.Ivf.loadIndex(s, path)
-    graft.dedup.SemDedup.semanticDedupAssigned(assigned,
-        compKey = Some((s"semdedup-scaled-cc-$dir|$nCells",
-          tableEpoch(s, dir, "embeddings"))))
+    graft.dedup.SemDedup.semanticDedupAssigned(assigned)
       .orderBy(col("vec_id"))
   }
 

@@ -44,29 +44,34 @@ object Clusters {
   val CheckpointDirConf = "spark.graft.clusters.checkpointDir"
 
   /** Per-round lineage truncation state for one connectedComponents
-    * call in reliable mode: a unique subdir under the configured
-    * checkpoint root, plus the previous round's path so superseded
-    * copies are deleted as soon as the next round lands (Spark's
-    * `Dataset.checkpoint` would leave every round's files behind —
-    * reliable checkpoints are only cleaned under an opt-in cleaner
-    * conf). Only the FINAL round's tiny (node, comp) parquet remains:
-    * it backs the returned frame, so it must outlive the call; the
-    * caller owns the configured directory's lifecycle. */
+    * call. Each round supersedes the previous one, which is released
+    * as soon as the next round lands. Local mode unpersists the
+    * superseded `localCheckpoint` blocks (otherwise only Spark's
+    * GC-driven cleaner would reclaim them). Reliable mode writes a
+    * unique subdir under the configured checkpoint root and deletes
+    * the superseded round's parquet (Spark's `Dataset.checkpoint`
+    * would leave every round's files behind — reliable checkpoints are
+    * only cleaned under an opt-in cleaner conf). Only the FINAL round
+    * remains: it backs the returned frame, so it must outlive the
+    * call; the caller owns the configured directory's lifecycle. */
   private final class Truncator(spark: org.apache.spark.sql.SparkSession) {
     private val root = spark.conf.get(CheckpointDirConf, "")
     private val runDir =
       if (root.isEmpty) "" else s"$root/cc-${java.util.UUID.randomUUID()}"
     private var round = 0
-
-    /** The run dir a returned frame keeps reading after the call
-      * (reliable mode only) — recorded in the memo entry so eviction
-      * can reclaim it and a hit can validate it still exists. */
-    def retainedDir: Option[String] =
-      if (root.isEmpty) None else Some(runDir)
+    private var localBacking = Seq.empty[org.apache.spark.rdd.RDD[_]]
 
     def apply(df: DataFrame): DataFrame =
-      if (root.isEmpty) df.localCheckpoint()
-      else {
+      if (root.isEmpty) {
+        // eager: the new round is materialized and its lineage cut
+        // before the superseded round's blocks are dropped
+        val cp = df.localCheckpoint()
+        localBacking.foreach(_.unpersist(blocking = false))
+        localBacking = cp.queryExecution.analyzed.collect {
+          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+        }
+        cp
+      } else {
         val path = s"$runDir/labels-$round"
         if (round == 0)
           // surface the retained path: the final round's parquet backs
@@ -102,157 +107,14 @@ object Clusters {
     * Above the threshold the distributed propagation loop runs; both
     * paths converge to the same min-label fixpoint, so the choice is
     * invisible in the output (and the oracle hash). */
-  /** One resolved component map plus what backs it: `retainedDir`
-    * for the reliable-checkpoint path (frame reads that parquet),
-    * nothing extra for the small path (LocalRelation — driver rows)
-    * or the localCheckpoint path (backing RDDs are discoverable in
-    * the frame's own plan). */
-  private final case class CompEntry(df: DataFrame,
-      retainedDir: Option[String])
-
-  /** Checkpoint-backed RDDs inside a returned frame's plan (empty
-    * for the LocalRelation small path). */
-  private def backingRdds(df: DataFrame) =
-    df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-
-  /** Best-effort release of an entry's physical backing: unpersist
-    * localCheckpoint blocks, delete the retained reliable-checkpoint
-    * run dir (r20 advice: eviction dropped the reference but never
-    * the backing, orphaning checkpoint data until JVM exit). After
-    * release the frame is UNUSABLE (lineage was truncated), which is
-    * why release only runs on eviction / clearAll — batch boundaries
-    * where no consumer may hold the frame. */
-  private def releaseEntry(e: CompEntry): Unit = {
-    try backingRdds(e.df).foreach(_.unpersist(blocking = false))
-    catch { case _: Throwable => () }
-    e.retainedDir.foreach { dir =>
-      try {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(
-          e.df.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
-      } catch { case _: Throwable => () }
-    }
-  }
-
-  /** Memo-hit validation (r20 advice, medium): the backing has a
-    * weaker lifetime than the memo — an operator may delete the
-    * retained checkpoint dir (its own log message invites exactly
-    * that), and localCheckpoint blocks can be unpersisted or lost.
-    * A hit over dead backing would fail the query instead of
-    * recomputing, so verify cheaply (no Spark job: one FS existence
-    * probe / storage-level reads) and rebuild on failure. */
-  private def entryValid(e: CompEntry): Boolean = {
-    val sc = e.df.sparkSession.sparkContext
-    if (sc.isStopped) false
-    else e.retainedDir match {
-      case Some(dir) =>
-        try {
-          val p = new org.apache.hadoop.fs.Path(dir)
-          p.getFileSystem(sc.hadoopConfiguration).exists(p)
-        } catch { case _: Throwable => false }
-      case None =>
-        backingRdds(e.df).forall(
-          _.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-    }
-  }
-
-  /** Epoch-keyed memo over [[connectedComponents]] — the saved-index
-    * / `BpeLite.ensureTrainedMerges` discipline applied to the
-    * CLUSTER-RESOLUTION artifact: a production dedup pipeline
-    * materializes the component map once per corpus version and
-    * serves every downstream decision (canonical keeper, leak-proof
-    * split, corpus filter) from it. `pairs` is BY-NAME: a memo hit
-    * never constructs the candidate frame at all. Keyed on (session
-    * uuid — the returned frame is session-bound —, cacheKey, epoch),
-    * bounded LRU with backing release on eviction. `epoch = None`
-    * resolves unconditionally ([[graft.io.SavedIndex]]'s vouching
-    * contract).
-    *
-    * Registered with [[graft.io.Caches.clearAll]] (r20 verdict #1):
-    * the bench clears all caches between its min-of-3 runs so every
-    * run prices the row's declared work — the r20 memo was
-    * engineered to survive that clear, which made the five
-    * signature-index consumer rows price a cached-map read instead
-    * of the candidate self-join + union-find they declare. The memo
-    * now shares the clearAll lifecycle: it dedupes resolution WITHIN
-    * a run (and between batch boundaries for long-lived consumers),
-    * never across bench runs. */
-  private val componentMemo = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String, String), CompEntry](
-        32, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, String), CompEntry]): Boolean = {
-        val evict = size() > 16
-        if (evict) releaseEntry(e.getValue)
-        evict
-      }
-    })
-
-  graft.io.Caches.registerOnClear(() => clearMemo())
-
-  /** Release every memoized map's backing and empty the memo — the
-    * [[graft.io.Caches.clearAll]] hook (also what specs call). */
-  private[graft] def clearMemo(): Unit = componentMemo.synchronized {
-    componentMemo.values().forEach(e => releaseEntry(e))
-    componentMemo.clear()
-  }
-
-  /** Live memo entries — the bound/lifecycle assertion for specs. */
-  private[graft] def memoSize: Int = componentMemo.synchronized {
-    componentMemo.size()
-  }
-
-  /** Per-key build gates ([[graft.io.SavedIndex]] single-flight,
-    * r20 advice: two concurrent first callers both paid the
-    * candidate self-join + union-find). Distinct keys never
-    * serialize behind each other's resolution. */
-  private val building = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), AnyRef]()
-
-  def ensureComponents(spark: org.apache.spark.sql.SparkSession,
-      cacheKey: String, epoch: Option[String],
-      smallGraphThreshold: Long = 1L << 18)(pairs: => DataFrame)
-      : DataFrame = epoch match {
-    case None =>
-      connectedComponents(pairs, smallGraphThreshold = smallGraphThreshold)
-    case Some(e) =>
-      val key = (graft.io.Sessions.uuid(spark), cacheKey, e)
-      val hit = componentMemo.get(key)
-      if (hit != null && entryValid(hit)) hit.df
-      else {
-        val gate = building.computeIfAbsent(key, _ => new AnyRef)
-        try gate.synchronized {
-          val again = componentMemo.get(key)
-          if (again != null && entryValid(again)) again.df
-          else {
-            if (again != null) {
-              componentMemo.remove(key)
-              releaseEntry(again) // invalid: release is best-effort
-            }
-            val v = componentsEntry(pairs,
-              smallGraphThreshold = smallGraphThreshold)
-            componentMemo.put(key, v)
-            v.df
-          }
-        } finally building.remove(key)
-      }
-  }
-
   def connectedComponents(pairs: DataFrame, maxIter: Int = 40,
-      smallGraphThreshold: Long = 1L << 18): DataFrame =
-    componentsEntry(pairs, maxIter, smallGraphThreshold).df
-
-  private def componentsEntry(pairs: DataFrame, maxIter: Int = 40,
-      smallGraphThreshold: Long = 1L << 18): CompEntry = {
+      smallGraphThreshold: Long = 1L << 18): DataFrame = {
     // both union branches and every iteration read the pairs; without
     // this persist the candidate GENERATOR (minhash/simhash pipeline)
     // executes once per branch. MEMORY_AND_DISK: candidate volume is
     // bounded by near-dup cluster sizes, and it spills, not OOMs.
     val p = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (p.count() <= smallGraphThreshold)
-      return CompEntry(driverUnionFind(p), None)
+    if (p.count() <= smallGraphThreshold) return driverUnionFind(p)
     val edges = p.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .unionByName(p.select(col("doc_b").as("a"), col("doc_a").as("b")))
       .distinct()
@@ -291,7 +153,7 @@ object Clusters {
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds")
-    CompEntry(labels, truncate.retainedDir)
+    labels
   }
 
   /** Union-find with path compression over a collected pair list,
@@ -339,8 +201,8 @@ object Clusters {
   def canonicalize(docs: DataFrame, pairs: DataFrame): DataFrame =
     canonicalizeComp(docs, connectedComponents(pairs))
 
-  /** [[canonicalize]] over an already-resolved component map — what
-    * epoch-memoized callers ([[ensureComponents]]) compose with. */
+  /** [[canonicalize]] over an already-resolved component map — for
+    * callers that feed one map to several consumers. */
   def canonicalizeComp(docs: DataFrame, comp: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("cluster_id"))
     val rank = Window.partitionBy(col("cluster_id"))

@@ -122,8 +122,10 @@ object Dedup {
     // the aggregate+join-back form shuffled the gram stream for the
     // count AND re-read it for the join (with a broadcast whose size
     // is the duplicated-gram set — corpus-proportional on
-    // boilerplate-heavy corpora); a count-over-partition keeps the
-    // same one shuffle and nothing else. Identical candidate rows.
+    // boilerplate-heavy corpora); a count-over-partition drops the
+    // re-read and the broadcast. The window still shuffles the FULL
+    // gram stream with no map-side partial count, so every occurrence
+    // of one hot gram lands in one task. Identical candidate rows.
     val wDup = Window.partitionBy(col("gh"))
     val cand = grams.withColumn("cnt", count(lit(1)).over(wDup))
       .filter(col("cnt") > 1).select(col("doc_id"), col("pos"))

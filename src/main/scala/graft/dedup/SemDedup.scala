@@ -81,16 +81,8 @@ object SemDedup {
     * not per call — this seam is where the epoch'd saved index plugs
     * in. Bit-identical to the inline path (qv ints and cell ids
     * round-trip parquet losslessly). */
-  /** `compKey`: optional (cacheKey, corpus epoch) voucher — with it,
-    * the ε-pair self-join + transitive closure resolve ONCE per
-    * corpus version ([[Clusters.ensureComponents]], r20) and every
-    * later call reuses the component map; the per-call work drops to
-    * the assignment read + the keeper join. Values are unchanged:
-    * the closure is a deterministic min-label fixpoint over a
-    * deterministic pair set. */
   def semanticDedupAssigned(assigned: DataFrame,
-      epsNum: Long = 361L, epsDen: Long = 400L,
-      compKey: Option[(String, Option[String])] = None): DataFrame = {
+      epsNum: Long = 361L, epsDen: Long = 400L): DataFrame = {
     val dq = graft.vector.Quantize.dotQ _
     // norms are per-VECTOR (n rows), never per-pair (n²/cells rows):
     // computed once here and carried through the banded join. The
@@ -109,12 +101,7 @@ object SemDedup {
         col("dot") * col("dot") * lit(epsDen) >=
           lit(epsNum) * col("a_nn") * col("b_nn"))
       .select(col("doc_a"), col("doc_b"))
-    val comp = compKey match {
-      case Some((k, e)) =>
-        Clusters.ensureComponents(assigned.sparkSession,
-          s"$k|$epsNum/$epsDen", e)(pairs)
-      case None => Clusters.connectedComponents(pairs)
-    }
+    val comp = Clusters.connectedComponents(pairs)
     val w = Window.partitionBy(col("cluster_id"))
     val base = keyed.select(col("doc_id").as("vec_id"), col("cell"))
     base

@@ -107,36 +107,15 @@ object Caches {
       Caches.persistTracked(df, tag)
   }
 
-  /** JVM-level memo stores (the BPE trained-merges memo, the
-    * cluster-component memo) register a hook here so [[clearAll]]
-    * reaches them too. Rationale (r20 verdict #1): the bench's
-    * min-of-3 contract is that every run is self-contained — a memo
-    * engineered to survive `cacheManager.clearCache()` made runs 2–3
-    * price a memo HIT instead of the row's declared work. Any future
-    * cross-run memo MUST register here or key strictly on artifacts
-    * that live outside the JVM (the [[SavedIndex]] on-disk contract,
-    * which is priced by explicit inline/`_indexed` twin rows). */
-  private val onClear =
-    new java.util.concurrent.CopyOnWriteArrayList[Runnable]()
-
-  def registerOnClear(hook: Runnable): Unit = onClear.add(hook)
-
   /** Drop every cached/persisted frame in the session — the batch
     * boundary call for long-lived consumers. Safe at any time:
     * persisted data is a recomputable cache, never the source of
-    * truth, so the only cost of clearing early is recompute. The one
-    * exception is frames obtained from a registered memo store
-    * (e.g. [[graft.dedup.Clusters.ensureComponents]]): their backing
-    * is RELEASED here, so such frames must not be held across a
-    * clearAll — it is a batch boundary for them, not a cache hint. */
-  def clearAll(spark: SparkSession): Unit = {
-    lock.synchronized {
-      spark.sharedState.cacheManager.clearCache()
-      tracked.clear()
-    }
-    // outside the registry lock: hooks take their own store locks, and
-    // a store's miss path may itself call persistTracked (by-name pair
-    // generators) — holding `lock` across both orders would deadlock
-    onClear.forEach(_.run())
+    * truth, so the only cost of clearing early is recompute. Reuse
+    * across runs belongs to artifacts outside the JVM (the
+    * [[SavedIndex]] on-disk contract), never to state this call
+    * would have to reset. */
+  def clearAll(spark: SparkSession): Unit = lock.synchronized {
+    spark.sharedState.cacheManager.clearCache()
+    tracked.clear()
   }
 }

@@ -236,7 +236,7 @@ object TextAnalysis {
     * q_repetition's 2 Mchar: the classifier's per-char kernel is
     * cheaper than gram counting, so the split's fixed shuffle cost
     * wins later — per-row vs split walls are 2.7 / 5.9 s at 5 MB but
-    * 27.6 / 11.5 s at 50 MB (ClfSkewProbe), crossing near 10 MB.
+    * 27.6 / 11.5 s at 50 MB, crossing near 10 MB.
     * 8 Mchar keeps sub-crossover docs on the cheaper per-row task
     * (≤ ~5 s, tolerable against the 100 TB task median) and splits
     * the true stragglers. */

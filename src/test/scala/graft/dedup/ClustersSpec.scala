@@ -89,72 +89,28 @@ class ClustersSpec extends AnyFunSuite with SparkTestBase {
     assert(dist.forall(_._2 == 1L), "whole chain is one component")
   }
 
-  test("ensureComponents: memo hit within a batch, cleared by Caches.clearAll") {
+  test("local checkpoint rounds: superseded rounds released, the returned map outlives later calls and clearAll") {
     import spark.implicits._
-    val key = s"spec-cc-${java.util.UUID.randomUUID()}"
-    var built = 0
-    def pairs = {
-      built += 1
-      Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
+    val chain = (1L to 40L).sliding(2).map(s => (s.head, s.last)).toSeq
+      .toDF("doc_a", "doc_b")
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    // threshold 0 forces the distributed loop: one localCheckpoint per
+    // round, each superseded round unpersisted once the next lands
+    val held = Clusters.connectedComponents(chain, smallGraphThreshold = 0)
+    val added = persisted -- before
+    assert(added.size <= 1,
+      s"only the final round may stay persisted; added RDDs ${added.toSeq.sorted}")
+    // nothing releases a map a caller still holds: later resolutions
+    // and the batch-boundary clear leave its backing alone
+    (1 to 17).foreach { i =>
+      Clusters.connectedComponents(
+        Seq((100L * i, 100L * i + 1)).toDF("doc_a", "doc_b"),
+        smallGraphThreshold = 0).count()
     }
-    val a = Clusters.ensureComponents(spark, key, Some("e1"))(pairs)
-    assert(a.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
-      Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
-    assert(built == 1)
-    // same (key, epoch): the by-name pairs must never be constructed
-    Clusters.ensureComponents(spark, key, Some("e1"))(pairs).count()
-    assert(built == 1, "memo hit must not re-resolve")
-    // the bench's between-run boundary: the memo must NOT survive it
-    // (r20 verdict #1 — min-of-3 runs price the declared work)
     graft.io.Caches.clearAll(spark)
-    val c = Clusters.ensureComponents(spark, key, Some("e1"))(pairs)
-    assert(built == 2, "clearAll must empty the component memo")
-    assert(c.collect().length == 3)
-  }
-
-  test("ensureComponents: dead reliable-checkpoint backing detected, rebuilt") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ccm").toString
-    spark.conf.set(Clusters.CheckpointDirConf, dir)
-    val key = s"spec-ccv-${java.util.UUID.randomUUID()}"
-    var built = 0
-    def pairs = {
-      built += 1
-      (1L to 20L).sliding(2).map(s => (s.head, s.last)).toSeq
-        .toDF("doc_a", "doc_b")
-    }
-    try {
-      // threshold 0 forces the distributed path -> checkpoint-backed
-      val a = Clusters.ensureComponents(spark, key, Some("e1"),
-        smallGraphThreshold = 0)(pairs)
-      assert(a.collect().forall(_.getLong(1) == 1L) && built == 1)
-      // simulate the operator consuming the run dir (the log message
-      // invites exactly that): a memo hit over the dead backing must
-      // REBUILD, not FileNotFound (r20 advice, medium)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete()
-      }
-      Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("cc-")).foreach(rm)
-      val b = Clusters.ensureComponents(spark, key, Some("e1"),
-        smallGraphThreshold = 0)(pairs)
-      assert(built == 2, "invalid backing must trigger a rebuild")
-      assert(b.collect().forall(_.getLong(1) == 1L))
-      // clearMemo releases the rebuilt entry's run dir too
-      Clusters.clearMemo()
-      val left = Option(new java.io.File(dir).listFiles())
-        .getOrElse(Array.empty).filter(_.getName.startsWith("cc-"))
-      assert(left.isEmpty,
-        s"clearMemo must reclaim retained checkpoint dirs; found ${left.toSeq}")
-    } finally {
-      spark.conf.unset(Clusters.CheckpointDirConf)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete()
-      }
-      rm(new java.io.File(dir))
-    }
+    val got = held.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == (1L to 40L).map(_ -> 1L).toMap)
   }
 
   test("reliable-checkpoint toggle: distributed path converges and writes durably") {

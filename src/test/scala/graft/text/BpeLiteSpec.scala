@@ -216,25 +216,6 @@ class BpeLiteSpec extends AnyFunSuite {
     assert(round.count() == 1)
   }
 
-  test("ensureTrainedMerges: epoch hit serves the memo, Caches.clearAll retrains") {
-    val spark = graft.SparkTestBase.spark
-    import spark.implicits._
-    val key = s"spec-bpe-${java.util.UUID.randomUUID()}"
-    val d1 = Seq("low low lower lowest").toDF("text")
-    val d2 = Seq("zig zag zigzag zag").toDF("text")
-    val m1 = BpeLite.ensureTrainedMerges(d1, key, Some("e1"))
-    val m2direct = BpeLite.trainDistributed(d2)
-    assert(m1 != m2direct, "fixture corpora must train different merges")
-    // same (key, epoch): the memo serves d1's merges even when offered
-    // a different corpus — the epoch token is the caller's promise
-    assert(BpeLite.ensureTrainedMerges(d2, key, Some("e1")) == m1)
-    // the bench's between-run boundary: the memo must NOT survive it
-    // (r20 verdict #1 — min-of-3 runs price the 8-round trainer)
-    graft.io.Caches.clearAll(spark)
-    assert(BpeLite.ensureTrainedMerges(d2, key, Some("e1")) == m2direct,
-      "clearAll must empty the trained-merges memo")
-  }
-
   test("wordCounts refuses an unbounded driver collect") {
     val spark = graft.SparkTestBase.spark
     import spark.implicits._
